@@ -29,6 +29,9 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+from web_scraper_spark.session import default_memory  # noqa: E402
+
 WORKER_PY = os.path.join(REPO, "scripts", "scaling_worker.py")
 
 
@@ -81,7 +84,7 @@ def run_level(cores: int, frontier: int, fetch: int, repeat: int, pin: bool = Fa
         cmd = [
             "spark-submit",
             "--master", f"local[{cores}]",
-            "--driver-memory", os.environ.get("SPARK_DRIVER_MEM", "48g"),
+            "--driver-memory", default_memory("SPARK_DRIVER_MEM", 48, 3 / 8),
             "--py-files", submit_zip,
             WORKER_PY,
         ]

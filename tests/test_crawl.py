@@ -171,6 +171,36 @@ class TestResume:
         assert ra == rb
 
 
+class TestCheckpointRelease:
+    def test_generations_release_checkpoints(self, spark, tmp_path_factory):
+        """run_generation cuts its stage boundaries with localCheckpoint
+        and frees every checkpoint (and every slim cache) before it
+        returns: after each of two generations no persisted RDD is left
+        that was not there before, and the CacheManager is back at its
+        pre-generation size."""
+        web = SynthWebConfig(n_hosts=3, pages_per_host=6)
+        cfg = CrawlConfig(max_pages=20, max_depth=2, horizon=5.0, num_shards=8)
+        root = str(tmp_path_factory.mktemp("release"))
+        cat = init_crawl(spark, root, _seeds_df(spark, web), cfg)
+
+        jsc = spark.sparkContext._jsc
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        cached = cm.getClass().getDeclaredField("cachedData")
+        cached.setAccessible(True)
+
+        def persisted():
+            return set(jsc.getPersistentRDDs().keySet())
+
+        # compare RDD ids, not counts: the ContextCleaner may drop older
+        # tests' RDDs meanwhile, but a leaked checkpoint is a new id
+        rdds_before, cached_before = persisted(), cached.get(cm).size()
+        for _ in range(2):
+            res = run_generation(cat, cfg, web)
+            assert res.fetched > 0
+            assert persisted() <= rdds_before, (persisted(), rdds_before)
+            assert cached.get(cm).size() == cached_before
+
+
 class TestCompaction:
     def test_compacted_crawl_state_identical(self, spark, tmp_path_factory):
         """compact_every=2 must change file layout only, never results."""

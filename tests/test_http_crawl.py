@@ -103,6 +103,12 @@ def test_http_crawl_end_to_end(spark, server, tmp_path):
     assert _HITS.get("/private/x", 0) == 0
     # robots.txt itself fetched exactly once (TTL-cached thereafter)
     assert _HITS.get("/robots.txt") == 1
+    # every page requested exactly once: each generation reads its fetch
+    # output back from one checkpoint, never re-running the fetch per
+    # consumer; /dead is requested once per T7 attempt
+    for path in ("/", "/a", "/b"):
+        assert _HITS.get(path) == 1, (path, _HITS)
+    assert _HITS.get("/dead") == cfg.retry_count, _HITS
 
     # T7 over the real transport: /dead failed retry_count times then went
     # terminal; it never entered pages or the seen set

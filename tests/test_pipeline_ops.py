@@ -186,7 +186,7 @@ class TestDedup:
             assert got == want, (trial, n, m)
 
     def test_cc_checkpoint_blocks_freed(self, spark):
-        """Pin _free_local_checkpoint on the RUNNING Spark version (r3
+        """Pin free_local_checkpoint on the RUNNING Spark version (r3
         ADVICE): each propagation round's checkpoint blocks must actually
         be released — a Spark upgrade that moves the Catalyst internals
         would silently fall back to leak-until-GC (and log once)."""

@@ -189,6 +189,23 @@ class TestNativeCanonicalizeParity:
         assert g == w, (href, g, w)
 
 
+    def test_expression_size_bounded(self, spark):
+        """Every intermediate of canonicalize_expr is referenced once, so
+        the expression stays ~a dozen regexp_replace nodes. Re-reading an
+        intermediate (a CASE guard or a length test around it) copies its
+        whole subtree: the old form had 115 nodes, and its generated Java
+        outgrew the 64 KB method limit, costing the links stage its
+        whole-stage codegen every generation."""
+        from web_scraper_spark.functions.urlops import canonicalize
+
+        df = spark.createDataFrame([(B, "x")], ["b", "h"])
+        plan = (
+            df.select(canonicalize(F.col("b"), F.col("h")).alias("c"))
+            ._jdf.queryExecution().analyzed().toString()
+        )
+        assert plan.count("regexp_replace(") <= 50, plan.count("regexp_replace(")
+
+
 class TestUrlFeatures:
     """urlops.url_features_exprs — URL shape/spam scoring."""
 

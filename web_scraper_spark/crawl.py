@@ -46,6 +46,20 @@ a seen-skip, a terminal failure or a new/retried url are recomputed and
 rewritten, every other shard's files carry forward untouched, so the
 frontier commit is O(touched shards) instead of O(frontier). host_state is
 rewritten per generation (it is one row per host — small by construction).
+
+Materialize once: every stage boundary that more than one later step reads
+(frontier, candidates, batch, robots rules, the robots decision, fetch
+output, failure rows, analysis, links, new frontier rows, the host-state
+delta) is cut with ONE eager ``localCheckpoint()``. Every downstream plan
+then starts from a flat ``Scan ExistingRDD`` instead of re-planning,
+re-optimizing and re-compiling the nested plans above it, and every frame
+that came from a fetch is read back from its checkpoint — a page or a
+robots.txt is requested once per generation, never once per consumer. The
+checkpoints are released when the generation ends (commit or error).
+Failure semantics: a checkpoint's lineage is cut, so losing an executor
+that holds checkpoint blocks fails the generation before its commit; the
+catalog is untouched and resume replays the generation from the last
+committed snapshot (the contract every kill already relies on).
 """
 
 from __future__ import annotations
@@ -60,6 +74,7 @@ from . import schemas
 from .catalog import Catalog, Snapshot
 from .config import ROBOTS_TTL_SECONDS, CrawlConfig
 from .functions import textops
+from .functions.dedupops import free_local_checkpoint
 from .functions.urlops import (
     canonicalize,
     host_bucket_expr,
@@ -152,6 +167,29 @@ def run_generation(
     web: SynthWebConfig,
 ) -> GenerationResult:
     """Advance the crawl by one generation; commits exactly one snapshot."""
+    held: list[DataFrame] = []  # this generation's stage checkpoints
+    persists: list[DataFrame] = []  # admission + with_global_rank slim caches
+    try:
+        return _generation(cat, cfg, web, held, persists)
+    finally:
+        for df in held:
+            free_local_checkpoint(df)
+        for df in persists:
+            df.unpersist()
+
+
+def _generation(
+    cat: Catalog,
+    cfg: CrawlConfig,
+    web: SynthWebConfig,
+    held: list[DataFrame],
+    persists: list[DataFrame],
+) -> GenerationResult:
+    def materialize(df: DataFrame) -> DataFrame:
+        ck = df.localCheckpoint(eager=True)
+        held.append(ck)
+        return ck
+
     spark = cat.spark
     snap = cat.current_snapshot()
     assert snap is not None, "init_crawl first"
@@ -203,7 +241,11 @@ def run_generation(
         return GenerationResult(g, 0, 0, 0, 0, True)
 
     frontier = cat.read("frontier")
-    if frontier is None or not frontier.head(1):
+    if frontier is None:
+        return GenerationResult(g, 0, 0, 0, 0, True)
+    frontier = materialize(frontier)
+    n_frontier = frontier.count()
+    if n_frontier == 0:
         return GenerationResult(g, 0, 0, 0, 0, True)
     seen = cat.read("seen")
     # bucket-pure lineage of the seen table (stage_append_cow): both seen
@@ -225,18 +267,15 @@ def run_generation(
         host_state = host_state.drop("host_bucket")
     failures = cat.read("fetch_failures")
 
-    frontier = frontier.cache()
-
     # -------- 1. pop-gate: drop frontier rows already seen (urls_skipped).
     # force_rescrape bypasses the visited check (url_processor.c:47-53)
     if cfg.force_rescrape:
         candidates = frontier
-        n_frontier = n_candidates = frontier.count()
+        n_candidates = n_frontier
     else:
-        candidates = seen_ops.filter_unseen(
+        candidates = materialize(seen_ops.filter_unseen(
             frontier, seen, sketch_df, bucket_files=seen_files
-        ).cache()
-        n_frontier = frontier.count()
+        ))
         n_candidates = candidates.count()
     n_skipped = n_frontier - n_candidates
     if n_candidates == 0:
@@ -250,8 +289,6 @@ def run_generation(
         m["urls_skipped"] = m.get("urls_skipped", 0) + n_skipped
         m["schema_v"] = SCHEMA_V
         cat.commit(generation=g + 1, t0=t0, metrics=m)
-        frontier.unpersist()
-        candidates.unpersist()
         return GenerationResult(g, 0, n_skipped, 0, 0, True)
 
     # -------- 1b. T7 retry cooldown: urls in failure backoff stay IN the
@@ -270,7 +307,6 @@ def run_generation(
         eligible = candidates
 
     # -------- 2. politeness admission
-    persists: list = []  # with_global_rank slim caches; unpersisted at exit
     budget_left = (cfg.max_pages - total_processed) if cfg.max_pages else None
     if cfg.oracle_mode:
         batch = sched.admit_batch(
@@ -282,7 +318,7 @@ def run_generation(
             eligible, host_state, t0, horizon=cfg.horizon,
             salt=cfg.hot_host_salt, max_batch=budget_left, registry=persists,
         )
-    batch = batch.cache()
+    batch = materialize(batch)
 
     # -------- 3. robots refresh + decision
     # Bucket-pruned robots read (the per-domain Redis key analog,
@@ -340,9 +376,12 @@ def run_generation(
         )
     else:
         fetched_bodies = fetch_src.fetch_robots(need, web)
-    new_rules = robots_ops.rules_from_corpus(fetched_bodies, fetched_at=now, fetch_seq=g + 1)
+    # the robots fetch happens HERE, once: the decision below and the
+    # robots commit both read this checkpoint
+    new_rules = materialize(
+        robots_ops.rules_from_corpus(fetched_bodies, fetched_at=now, fetch_seq=g + 1)
+    )
     robots_all = new_rules if robots is None else robots.unionByName(new_rules)
-    robots_all = robots_all.cache()
 
     # restrict the rules table to this batch's hosts up front: the full
     # robots table grows with every host ever crawled and stops being
@@ -351,15 +390,15 @@ def run_generation(
     # the crawl-delay application and the decision join only ever need
     # this slice (delay application is an idempotent max, so re-applying
     # on later batches is a no-op).
-    robots_batch = robots_all.join(
-        batch.select("host").distinct(), "host", "left_semi"
-    ).cache()
+    robots_batch = materialize(
+        robots_all.join(batch.select("host").distinct(), "host", "left_semi")
+    )
     host_state = sched.ensure_hosts(host_state, batch)
     host_state = sched.apply_crawl_delays(host_state, robots_batch)
 
     _, path_col = split_base_path_exprs(F.col("url_canon"))
     with_path = batch.withColumn("norm_path", normalize_path_expr(path_col))
-    decided = robots_ops.decide_allowed(with_path, robots_batch).cache()
+    decided = materialize(robots_ops.decide_allowed(with_path, robots_batch))
     allowed = decided.filter(F.col("allowed")).drop("allowed", "norm_path")
     disallowed = decided.filter(~F.col("allowed")).drop("allowed", "norm_path")
     n_disallowed = disallowed.count()
@@ -377,13 +416,24 @@ def run_generation(
             user_agent=cfg.user_agent,
             retries=cfg.http_inbatch_retries,
             concurrency=cfg.http_concurrency,
-        ).cache()
+        )
     else:
-        fetched_all = fetch_src.fetch_pages(allowed, web).cache()
-    fetched = fetched_all.filter(F.col("content").isNotNull()).cache()
-    failed = fetched_all.filter(F.col("content").isNull()).cache()
-    n_fetched = fetched.count()
-    n_failed = fetched_all.count() - n_fetched
+        fetched_all = fetch_src.fetch_pages(allowed, web)
+    # the page fetch happens HERE, once: fetched/failed (and through them
+    # pages, failures, host_state and seen) are filters of this checkpoint
+    fetched_all = materialize(fetched_all)
+    fetched = fetched_all.filter(F.col("content").isNotNull())
+    failed = fetched_all.filter(F.col("content").isNull())
+    # one job for all three fetch tallies (bytes_downloaded sums the same
+    # length(content) that pages.content_size stores)
+    tally = fetched_all.agg(
+        F.count("content").alias("ok"),
+        F.count(F.lit(1)).alias("all"),
+        F.coalesce(F.sum(F.length("content")), F.lit(0)).alias("bytes"),
+    ).first()
+    n_fetched = int(tally["ok"])
+    n_failed = int(tally["all"]) - n_fetched
+    bytes_dl = int(tally["bytes"])
 
     prev_attempts = (
         failures.select("url_sha1", "attempts")
@@ -391,7 +441,7 @@ def run_generation(
         else spark.createDataFrame([], "url_sha1 string, attempts int")
     )
     backoff = max(1, int(cfg.retry_delay))
-    fail_rows = (
+    fail_rows = materialize(
         failed.select("url_sha1", "url_canon", "host")
         .join(prev_attempts, "url_sha1", "left")
         .withColumn("attempts", (F.coalesce(F.col("attempts"), F.lit(0)) + 1).cast("int"))
@@ -405,12 +455,11 @@ def run_generation(
             .otherwise(F.lit(g + 1) + (F.col("attempts") - 1) * F.lit(backoff))
             .cast("long"),
         )
-        .cache()
     )
 
     # single-pass analysis (P13): one Arrow transfer of content, one parse
     # per document → title/meta/sentiment/links/images together
-    analyzed = (
+    analyzed = materialize(
         fetched.withColumn("_an", textops.analyze_udf(F.col("content")))
         .withColumn("title", F.col("_an.title"))
         .withColumn("description", F.col("_an.description"))
@@ -421,7 +470,6 @@ def run_generation(
         .withColumn("links", F.col("_an.links"))
         .withColumn("images", F.col("_an.images"))
         .drop("_an")
-        .cache()
     )
 
     # crawl_rank: per-generation (priority, url_canon) order, globally
@@ -480,14 +528,14 @@ def run_generation(
     )
     from .functions.urlops import junk_href
 
-    links_new = (
+    links_new = materialize(
         exploded.filter(~junk_href(F.col("href")))  # pre-filter: see junk_href
         .withColumn("to_url", canonicalize(F.col("parent_url"), F.col("href")))
         # canonicalize maps structurally-unresolvable hrefs (e.g. a bare
         # '//' with no authority) to null — dropped, like the sim does
         .filter(F.col("to_url").isNotNull())
         .select(F.col("parent_url").alias("from_url"), "to_url", "parent_depth")
-    ).cache()
+    )
 
     new_frontier_rows = (
         links_new.filter(F.col("parent_depth") < cfg.max_depth)
@@ -523,7 +571,7 @@ def run_generation(
     # existing row can only happen INSIDE one shard, so the bucket-local
     # groupBy equals the global one. At 10^10-frontier scale this turns the
     # per-generation frontier commit from O(frontier) into O(touched).
-    new_frontier_rows = new_frontier_rows.cache()
+    new_frontier_rows = materialize(new_frontier_rows)
     retry_rows = candidates.join(
         fail_rows.filter(F.col("next_retry_gen") < F.lit(schemas.GIVEUP_GEN)).select("url_sha1"),
         "url_sha1",
@@ -534,7 +582,7 @@ def run_generation(
 
     if cat.has_bucket_lineage("frontier", snap):
         # shards with seen-skip drops: cheap per-shard count diff (both
-        # sides cached; the joined result is ≤ num_shards rows)
+        # sides materialized; the joined result is ≤ num_shards rows)
         if cfg.force_rescrape:
             skip_shards = spark.createDataFrame([], "shard int")
         else:
@@ -615,9 +663,6 @@ def run_generation(
             F.lit(None).cast("int").alias("response_ms"),
         )
     )
-    bytes_dl = (
-        pages_new.agg(F.coalesce(F.sum("content_size"), F.lit(0))).collect()[0][0]
-    )
 
     # -------- 9. atomic snapshot. Every cfg.compact_every generations the
     # append-only tables are rewritten in-commit (small-file compaction —
@@ -679,10 +724,12 @@ def run_generation(
     if cat.has_bucket_lineage("host_state", snap):
         # delta fold: only the batch hosts' new rows (O(batch), never
         # O(hosts-ever-seen) — rate_limiter.c's O(1) per-domain update).
-        # Cached: it feeds both the carry anti-join and the write below,
-        # and Catalyst would otherwise duplicate the applyInPandas subtree.
-        hs_updated = sched.fold_host_state(host_state, results, delta_only=True).cache()
-        persists.append(hs_updated)
+        # Materialized: it feeds both the carry anti-join and the write
+        # below, and Catalyst would otherwise duplicate the applyInPandas
+        # subtree.
+        hs_updated = materialize(
+            sched.fold_host_state(host_state, results, delta_only=True)
+        )
         # changed buckets = the batch hosts' buckets (every batch row lands
         # in fetched/disallowed/failed, so touched hosts == batch hosts);
         # reuses the robots prune's collect when that path already ran
@@ -785,7 +832,7 @@ def run_generation(
         "urls_processed": total_processed + n_fetched,
         "urls_skipped": int(snap.metrics.get("urls_skipped", 0)) + n_skipped,
         "urls_disallowed": int(snap.metrics.get("urls_disallowed", 0)) + n_disallowed,
-        "bytes_downloaded": int(snap.metrics.get("bytes_downloaded", 0)) + int(bytes_dl),
+        "bytes_downloaded": int(snap.metrics.get("bytes_downloaded", 0)) + bytes_dl,
         "urls_failed": int(snap.metrics.get("urls_failed", 0)) + n_failed,
         "crawl_rank_next": rank_next + n_fetched,
         "num_shards": cfg.num_shards,
@@ -807,10 +854,6 @@ def run_generation(
     # counts come from parquet footers at write time) — a cat.read(...)
     # .count() here would re-scan the whole frontier every generation
     n_frontier_next = int(snap_next.tables.get("frontier", {}).get("rows", 0))
-    for df in (frontier, candidates, batch, robots_all, robots_batch,
-               fetched_all, fetched, failed, fail_rows, analyzed, decided,
-               links_new, new_frontier_rows, *persists):
-        df.unpersist()
     done = n_frontier_next == 0 or (
         cfg.max_pages and metrics["urls_processed"] >= cfg.max_pages
     )

@@ -814,7 +814,7 @@ WHERE bit_count(xor(a.sh, b.sh)) <= {max_hamming}
 _FREE_FALLBACK_LOGGED = False
 
 
-def _free_local_checkpoint(df: DataFrame) -> None:
+def free_local_checkpoint(df: DataFrame) -> None:
     """Release a localCheckpoint()'s cached blocks NOW.
 
     DataFrame.unpersist() is a NO-OP for checkpointed frames (it uncaches
@@ -940,7 +940,7 @@ def connected_components(
     labels = _cut(labels)  # local mode also persists (MEMORY_AND_DISK)
     # the frame to FREE each round must be the checkpointed frame itself:
     # `labels` is reassigned to new.drop("chg") below — a Project over the
-    # LogicalRDD — and _free_local_checkpoint's plan probe only reaches the
+    # LogicalRDD — and free_local_checkpoint's plan probe only reaches the
     # RDD on a bare LogicalRDD node (freeing the projection silently
     # fell back to GC; caught by test_cc_checkpoint_blocks_freed)
     labels_ck = labels
@@ -995,7 +995,7 @@ def connected_components(
         if checkpoint_mode == "reliable":
             _free_reliable_checkpoint(labels_ck)
         else:
-            _free_local_checkpoint(labels_ck)
+            free_local_checkpoint(labels_ck)
         labels_ck = new
         labels = new.drop("chg")
         if not changed:

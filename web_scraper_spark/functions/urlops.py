@@ -125,12 +125,16 @@ def canonicalize_udf(base: pd.Series, href: pd.Series) -> pd.Series:
 # Java regex (lookahead/lookbehind supported); $1 replacement syntax.
 _DOT_SELF = r"(://[^/]*(?:/[^/]*)*?)/\.(?=/|$)"
 _DOT_PARENT = r"(://[^/]*(?:/[^/]*)*?)/(?!\.\.(?:/|$))[^/]+/\.\.(?=/|$)"
+# ONE trailing slash off a string of length > 1 (extract_hrefs.c:68-71)
+_TRAILING_SLASH = r"(?s)(.)/\z"
 # Bounded dot-segment fixpoint, SHARED by the native expr and the pandas
 # kernel so they stay bit-identical: ../-chains deeper than this leave a
-# residual (never seen in practice). Kept small because Catalyst INLINES
-# the whole resolution CASE-tree into every nesting level — each extra
-# round multiplies the expression size (measured: 16 rounds → plan-text
-# blowup + JIT-hostile codegen that anti-scaled at 32 cores).
+# residual (never seen in practice). Each round adds two regexp_replace
+# nodes around the previous round's output, so the expression grows
+# linearly in DOT_ROUNDS — canonicalize_expr references every
+# intermediate exactly once (no CASE re-reads it), which keeps the whole
+# canonicalization at ~a dozen regexp_replace nodes and inside one
+# whole-stage-codegen method.
 DOT_ROUNDS = 4
 
 
@@ -142,7 +146,13 @@ def canonicalize_expr(base: Column, href: Column) -> Column:
     pinned by tests/test_urlops.py). The kernel's python string ops were
     measured as the crawl pipeline's scaling bottleneck (pandas StringDtype
     is object-backed → allocator/GC contention across python workers), so
-    the hot path stays JVM-side."""
+    the hot path stays JVM-side.
+
+    Size rule: Catalyst has no let-binding, so every extra reference to an
+    intermediate copies its whole subtree. Each intermediate below is read
+    once: the dot-segment rounds and the trailing-slash strip are regexes
+    that are no-ops when there is nothing to remove, not CASE guards that
+    would read their input again."""
     empty_or_junk = (
         href.isNull()
         | (F.length(href) == 0)
@@ -159,8 +169,10 @@ def canonicalize_expr(base: Column, href: Column) -> Column:
     bpath = F.substring_index(
         F.regexp_replace(b, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*", ""), "?", 1
     )
-    basedir = F.regexp_replace(bpath, r"[^/]*$", "")
-    basedir = F.when(F.length(basedir) > 0, basedir).otherwise(F.lit("/"))
+    # directory of the base path, "/" when it has none (RFC 3986 §5.3
+    # merge). Under a valid root bpath is "" or starts with "/": the "/"
+    # prepended here is dropped again unless bpath is empty
+    basedir = F.regexp_replace(F.concat(F.lit("/"), bpath), r"^/(?=/)|[^/]*$", "")
 
     resolved = (
         # proto-relative needs a non-empty authority ('//[^/]...'); a bare
@@ -172,20 +184,12 @@ def canonicalize_expr(base: Column, href: Column) -> Column:
         .when(F.length(h) == 0, b)  # fragment-only href → the base itself
         .otherwise(F.concat(root, basedir, h))
     )
-    # dot-segment removal only when a dot segment can exist: "/." is a
-    # cheap contains probe, and the 16-round lookahead-regex fixpoint is
-    # ~10x the cost of the whole rest of the expression — virtually all
-    # real links skip it (when() branches evaluate lazily in codegen)
-    dotted = resolved
+    # dot-segment removal: both regexes need a literal "/." to match, so
+    # on the common dot-free url each round is a failed scan
     for _ in range(DOT_ROUNDS):
-        dotted = F.regexp_replace(dotted, _DOT_SELF, "$1")
-        dotted = F.regexp_replace(dotted, _DOT_PARENT, "$1")
-    resolved = F.when(resolved.contains("/."), dotted).otherwise(resolved)
-    # strip ONE trailing slash when len > 1 (extract_hrefs.c:68-71)
-    resolved = F.when(
-        resolved.endswith("/") & (F.length(resolved) > 1),
-        resolved.substr(F.lit(1), F.length(resolved) - 1),
-    ).otherwise(resolved)
+        resolved = F.regexp_replace(resolved, _DOT_SELF, "$1")
+        resolved = F.regexp_replace(resolved, _DOT_PARENT, "$1")
+    resolved = F.regexp_replace(resolved, _TRAILING_SLASH, "$1")
 
     # malformed base: the pandas kernel's extracts yield <NA> which
     # propagates through concat → null result — but Spark regexp_extract

@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_memory(env: str, cap_gb: int, ram_share: float) -> str:
+    """Memory setting for one JVM pool: the ``env`` override when set,
+    else ``ram_share`` of physical RAM capped at ``cap_gb``. The caps
+    (48g heap, 16g off-heap) are sized for a large box; a fixed 48g heap
+    on a 16 GB machine lets the heap grow until the kernel OOM-kills the
+    JVM instead of collecting."""
+    if os.environ.get(env):
+        return os.environ[env]
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(512, min(cap_gb * 1024, int(ram_mb * ram_share)))}m"
+
+
 def get_spark(
     app_name: str = "web_scraper_spark",
     cores: int | None = None,
@@ -38,7 +50,9 @@ def get_spark(
         # runtime bloom-filter join pruning: a second bloom layer under the
         # explicit sharded seen-set sketches (SURVEY.md §4.2)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # heap + off-heap stay within half of RAM: the rest is for the
+        # Python UDF workers, the JVM's own overhead and the OS
+        .config("spark.driver.memory", default_memory("SPARK_DRIVER_MEM", 48, 3 / 8))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # off-heap Tungsten buffers: shuffle/sort/agg pages leave the Java
@@ -46,7 +60,7 @@ def get_spark(
         # (measured: dedup_admission 7.4s → 5.9s at local[32] together with
         # the local no-compress below). Equally valid on a cluster.
         .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", os.environ.get("SPARK_OFFHEAP", "16g"))
+        .config("spark.memory.offHeap.size", default_memory("SPARK_OFFHEAP", 16, 1 / 8))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128m")
         # local mode (this factory always builds local[N]): shuffle bytes
         # never cross a network — lz4 work is pure CPU overhead next to
